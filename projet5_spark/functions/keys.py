@@ -16,15 +16,26 @@ re-runs. Here the key is a pure function of the natural key:
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _SEP = "\x1f"
 
 
+def _plain_names(cols) -> bool:
+    """Whether every column is a plain ``\\w+`` name — the only names the
+    backticked SQL-text fast paths resolve exactly as ``F.col`` does.
+    ``F.col("a.b")`` is the nested field ``b`` of struct ``a``, while
+    the backticked ``a.b`` names a top-level column literally called
+    "a.b", and a backtick inside a name breaks the SQL text."""
+    return all(isinstance(c, str) and re.fullmatch(r"\w+", c) for c in cols)
+
+
 def surrogate_key(*cols: Column | str, bits: int = 256) -> Column:
     """Deterministic hex surrogate key over the natural-key columns."""
-    if all(isinstance(c, str) for c in cols):
+    if _plain_names(cols):
         # SQL-text fast path (r13): one py4j call instead of ~4 per
         # column — chr(31) constant-folds to the same separator literal
         args = ", ".join(f"cast(`{c}` as string)" for c in cols)
@@ -46,7 +57,7 @@ def tuple_digest(*cols: Column | str) -> Column:
     32-byte hash-join key — smaller broadcast hash table, one
     comparison per probe.
     """
-    if all(isinstance(c, str) for c in cols):
+    if _plain_names(cols):
         # SQL-text fast path (r13): one py4j call instead of ~10 per
         # column; identical encoding
         enc = ", ".join(

@@ -18,6 +18,8 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import footer
+
 _log = logging.getLogger("projet5_spark.run")
 
 
@@ -38,25 +40,19 @@ def _release_checkpoint(df: DataFrame) -> None:
 
 
 def _parquet_rows(df: DataFrame) -> int | None:
-    """Row count of a parquet-scan-leaf DataFrame from its file
-    footers (~1 ms for a local scratch checkpoint), or None when any
-    file is remote/unreadable — callers fall back to a count job."""
-    try:
-        import pyarrow.parquet as pq
-
-        files = df.inputFiles()
-        if not files:
-            # not a file-scan leaf (e.g. a localCheckpointed frame):
-            # 0 here would silently force small=True and broadcast an
-            # arbitrarily large table — report "unknown" instead
-            return None
-        total = 0
-        for f in files:
-            p = f[7:] if f.startswith("file://") else f
-            total += pq.ParquetFile(p).metadata.num_rows
-        return total
-    except Exception:
+    """Row count of a parquet-scan-leaf DataFrame from its files'
+    footers (``sources.footer``, ~1 ms for a local scratch checkpoint),
+    or None when the scan has no input files, more than
+    ``footer.MAX_PARTS`` of them, or any remote/unreadable one —
+    callers fall back to a count job."""
+    files = df.inputFiles()
+    if not files or len(files) > footer.MAX_PARTS:
+        # no files: not a file-scan leaf (e.g. a localCheckpointed
+        # frame) — 0 here would silently force small=True and
+        # broadcast an arbitrarily large table; report "unknown"
         return None
+    counts = [footer.row_count(f) for f in files]
+    return None if None in counts else sum(counts)
 
 
 def connected_components(

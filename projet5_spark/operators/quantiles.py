@@ -161,6 +161,10 @@ def grouped_exact_quantiles(
     return kept.groupBy(*keys).agg(*aggs)
 
 
+#: internal columns attach_exact_quantiles stages on its input rows
+_RESERVED = frozenset({"__cum", "__n", "__prev"})
+
+
 def attach_exact_quantiles(
     df: DataFrame,
     keys: list[str],
@@ -198,6 +202,11 @@ def attach_exact_quantiles(
     unlike grouped_exact_quantiles, this variant returns its input
     rows and cannot silently drop them).
 
+    Reserved names: the window pass stages its prefix sums in the
+    internal columns ``__cum``, ``__n`` and ``__prev``, so an input
+    that already has one of them (in any letter case) raises
+    ``ValueError`` instead of an ambiguous-reference analysis error.
+
     Returns ``df``'s columns plus one DOUBLE column per ``qs`` entry,
     bit-identical to ``F.percentile`` (same formula, same double ops;
     pinned by tests/test_quantiles.py). Same SQL-text composition as
@@ -209,6 +218,13 @@ def attach_exact_quantiles(
     (keys, value, count) relation, not raw facts, exactly as the
     grouped variant's step-1 fold does.
     """
+    clash = sorted(_RESERVED & {c.lower() for c in df.columns})
+    if clash:
+        raise ValueError(
+            f"attach_exact_quantiles: input columns {clash} collide with "
+            f"its reserved internal columns {sorted(_RESERVED)}; rename "
+            f"them first"
+        )
     vq = f"`{value}`"
     part = ", ".join(f"`{k}`" for k in keys)
     by = f"PARTITION BY {part} " if keys else ""

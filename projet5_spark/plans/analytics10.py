@@ -28,13 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.detmath import ln_det_int, ln_det_int_sql
+from ..sources.readers import fixture_table as _t
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from ..sources.readers import fixture_table
-
-    return fixture_table(spark, sf_dir, name)
 
 
 # --------------------------------------------------------------------------

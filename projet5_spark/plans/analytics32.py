@@ -17,14 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import fixture_table as _t
 from .analytics9 import _WIN_W, _win_grams_duck, win_fp_rows
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from ..sources.readers import fixture_table
-
-    return fixture_table(spark, sf_dir, name)
 
 
 # --------------------------------------------------------------------------

@@ -52,18 +52,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.detmath import ln_det_int, ln_det_int_sql
+from ..sources.readers import fixture_table as _t
+from .llm import _spread
 from .registry import query, quantize as _q
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from ..sources.readers import fixture_table
-
-    return fixture_table(spark, sf_dir, name)
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    # single-file fixture fan-out; see plans/llm.py::_spread
-    return df.repartition(spark.sparkContext.defaultParallelism)
 
 
 # --------------------------------------------------------------------------

@@ -30,13 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.readers import fixture_table as _t
 from .registry import query, quantize as _q
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from ..sources.readers import fixture_table
-
-    return fixture_table(spark, sf_dir, name)
 
 
 _HOURLY_SQL = """

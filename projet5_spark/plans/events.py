@@ -17,17 +17,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.joins import asof_join
-from ..sources.readers import read_events
+from ..sources.readers import fixture_table as _t, read_events
 from .registry import gridsum, query, quantize as _q
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from ..sources.readers import fixture_table
-
-    return fixture_table(spark, sf_dir, name)
 
 
 @query(

@@ -36,16 +36,10 @@ from pyspark.sql.types import (
 
 from ..functions.vectors import cosine_similarity, l2_norm
 from ..operators.dedup import exact_text_dedup
+from ..sources.readers import fixture_table as _t
 from .registry import query, quantize as _q
 
 _STOPWORDS = ("the", "a")
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from ..sources.readers import fixture_table
-
-    return fixture_table(spark, sf_dir, name)
-
 
 
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:

@@ -21,13 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.profile import duplicate_count, null_profile
+from ..sources.readers import fixture_table as _t
 from .registry import gridavg, gridsum, query, quantize as _q
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from ..sources.readers import fixture_table
-
-    return fixture_table(spark, sf_dir, name)
 
 
 def _sql_tables(sf_dir: str) -> dict[str, str]:

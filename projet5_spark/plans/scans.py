@@ -33,15 +33,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import fixture_table as _t
 from .registry import query
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from ..sources.readers import fixture_table
-
-    return fixture_table(spark, sf_dir, name)
 
 
 def _scratch(sf_dir: str, leaf: str) -> str:

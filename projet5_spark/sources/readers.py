@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from . import footer
+
 _log = logging.getLogger(__name__)
 
 #: Text codecs Spark cannot split: the whole file becomes ONE task no
@@ -242,150 +244,60 @@ def fixture_rowcount(
     fallback_df: DataFrame | None = None,
 ) -> int:
     """Exact row count of a fixture table, from parquet FOOTER metadata
-    when the path is local (~1 ms) instead of a Spark count job
+    (:func:`footer.row_count`, ~1 ms) instead of a Spark count job
     (~0.2 s warm at sf0.1 — and a full scheduling round-trip).
 
     Several scale-pivot decisions (ngram/winnowing/simhash/tfidf
     families) need only the corpus row count at plan-build time; the
     footer's ``num_rows`` is the same exact number the count job
-    returns (plain parquet has no deletion vectors), so the pivot is
-    unchanged on any input. Non-local or unreadable paths fall back to
-    the Spark count."""
-    path = f"{sf_dir}/{name}.parquet"
-    p = path[7:] if path.startswith("file://") else path
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(p):
-            files = [p]
-        elif os.path.isdir(p):
-            files = [
-                os.path.join(p, f)
-                for f in os.listdir(p)
-                if f.endswith(".parquet")
-            ]
-            if not files:
-                raise FileNotFoundError(f"no parquet parts under {p}")
-        else:
-            raise FileNotFoundError(p)
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:  # remote path / missing pyarrow / odd layout
-        # fallback_df: the caller's already-built frame — counting it
-        # (not a fresh read) keeps test seams that stub the table
-        # reader working, and is the same number on real inputs
-        if fallback_df is not None:
-            return fallback_df.count()
-        return fixture_table(spark, sf_dir, name).count()
+    returns, so the pivot is unchanged on any input. Paths the footer
+    listing rule does not serve fall back to the Spark count."""
+    n = footer.row_count(f"{sf_dir}/{name}.parquet")
+    if n is not None:
+        return n
+    # fallback_df: the caller's already-built frame — counting it (not
+    # a fresh read) keeps test seams that stub the table reader
+    # working, and is the same number on real inputs
+    if fallback_df is not None:
+        return fallback_df.count()
+    return fixture_table(spark, sf_dir, name).count()
 
 
 def fixture_column_max(
     spark: SparkSession, sf_dir: str, name: str, column: str
 ):
     """Exact max of a fixture column from parquet FOOTER statistics
-    when available locally (~1 ms), else a Spark ``max`` job.
-
-    Parquet int64 min/max statistics are exact (no truncation applies
-    to fixed-width types), so for the integer key columns the scale
-    pivots read this is the same number the aggregate returns. Any
-    file missing stats falls the whole call back to Spark."""
-    path = f"{sf_dir}/{name}.parquet"
-    p = path[7:] if path.startswith("file://") else path
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(p):
-            files = [p]
-        elif os.path.isdir(p):
-            files = [
-                os.path.join(p, f)
-                for f in os.listdir(p)
-                if f.endswith(".parquet")
-            ]
-            if not files:
-                raise FileNotFoundError(f"no parquet parts under {p}")
-        else:
-            raise FileNotFoundError(p)
-        mx = None
-        for fpath in files:
-            pf = pq.ParquetFile(fpath)
-            idx = pf.schema_arrow.get_field_index(column)
-            md = pf.metadata
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError(f"no min/max stats for {column}")
-                mx = st.max if mx is None else max(mx, st.max)
-        if mx is None:
-            raise ValueError("no row groups")
+    (:func:`footer.column_max`, ~1 ms), else a Spark ``max`` job."""
+    mx = footer.column_max(f"{sf_dir}/{name}.parquet", column)
+    if mx is not None:
         return mx
-    except Exception:  # remote path / missing stats / odd layout
-        return (
-            fixture_table(spark, sf_dir, name)
-            .agg(F.max(column))
-            .first()[0]
-        )
-
-
-#: Part-count cap for the directory footer probe: past this, reading
-#: every footer serially on the driver costs more than Spark's own
-#: (distributed, first-footer) inference job — fall back to it.
-_FOOTER_SCHEMA_MAX_PARTS = 64
+    return fixture_table(spark, sf_dir, name).agg(F.max(column)).first()[0]
 
 
 def _footer_schema(path: str) -> StructType | None:
-    """Spark schema of a local parquet file — or a directory of parts
-    with one uniform schema — from footer metadata (~1 ms per file),
-    or None when the fast path does not apply (schema differs across
-    parts — schema evolution; more parts than the probe cap; remote
-    path; missing pyarrow; any conversion surprise).
+    """Spark schema of a local parquet path from its footers
+    (:func:`footer.arrow_schema`, ~1 ms per part), or None when the
+    fast path does not apply — the footer listing rule gives none,
+    parts differ (schema evolution), or a column stores nanosecond
+    timestamps (legacy events encoding), which keep the dedicated
+    read_events decode path.
 
     ``from_arrow_schema(prefer_timestamp_ntz=True)`` is validated
     field-for-field identical to Spark's own parquet inference on
-    every fixture table × scale factor (tests/test_sources.py), and a
-    nanosecond-timestamp column (legacy events encoding) returns None
-    so those files keep the dedicated read_events decode path.
-
-    r13 (VERDICT item 3): directories of parts qualify when EVERY
-    part's arrow schema equals the first's — at 100 TB every table is
-    a directory, and the r12 single-file-only form silently paid the
-    inference job again on any multi-part fixture. A first-vs-all
-    equality check keeps the schema-evolution entry (parts that
-    genuinely differ) on the inference fallback."""
-    p = path[7:] if path.startswith("file://") else path
+    every fixture table × scale factor and on a multi-part directory
+    (tests/test_sources.py)."""
+    arrow = footer.arrow_schema(path)
+    if arrow is None:
+        return None
     try:
-        if os.path.isfile(p):
-            files = [p]
-        elif os.path.isdir(p):
-            files = sorted(
-                os.path.join(p, f)
-                for f in os.listdir(p)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-            if not files or len(files) > _FOOTER_SCHEMA_MAX_PARTS:
-                return None
-        else:
-            return None
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        arrow = None
-        for fpath in files:
-            pf = pq.ParquetFile(fpath)
-            if any(
-                pf.metadata.schema.column(i).physical_type == "INT96"
-                for i in range(pf.metadata.num_columns)
-            ):
-                return None  # legacy INT96 timestamps: let Spark infer
-            if arrow is None:
-                arrow = pf.schema_arrow
-            elif pf.schema_arrow != arrow:
-                return None  # schema evolution across parts: infer
         for field in arrow:
             if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
                 return None
         return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
-    except Exception:
+    except Exception:  # an arrow type Spark has no mapping for
         return None
 
 
@@ -396,13 +308,14 @@ def fixture_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     file either errors or silently yields bigint ts depending on
     session history.
 
-    r12: the schema comes from the parquet FOOTER when the path is one
-    local file — ``spark.read.parquet`` without a schema runs a footer
-    -inference job (~0.1 s of driver round-trip) on EVERY plan build,
-    which the bench pays once per timed run per table; the explicit
-    schema skips it (the R1 schema-explicit doctrine, extended to the
-    parquet fixtures). Falls back to inference for directories,
-    remote paths, or any footer surprise."""
+    r12: the schema comes from the parquet FOOTERS
+    (:func:`_footer_schema`) — ``spark.read.parquet`` without a schema
+    runs a footer-inference job (~0.1 s of driver round-trip) on EVERY
+    plan build, which the bench pays once per timed run per table; the
+    explicit schema skips it (the R1 schema-explicit doctrine, extended
+    to the parquet fixtures). A single file and a flat directory of
+    uniform parts qualify; partitioned or mixed layouts, remote paths,
+    schema evolution and any footer surprise fall back to inference."""
     if name == "events":
         return read_events(spark, sf_dir)
     path = f"{sf_dir}/{name}.parquet"

@@ -19,8 +19,6 @@ Scale/ops posture:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -30,6 +28,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..sources import footer
 
 #: legacy on-disk schema: ts as int64 nanoseconds (older fixture
 #: generators; see sources.readers.read_events). Newer fixtures store a
@@ -49,66 +49,49 @@ EVENTS_FILE_SCHEMA = StructType(
 def _probe_events_schema(spark: SparkSession, probe_path: str):
     """(ts_is_ns_long, spark_schema) for an events-shaped parquet path.
 
-    Fast path (r12): read the parquet FOOTER with pyarrow and convert
-    via ``from_arrow_schema(prefer_timestamp_ntz=True)`` — validated
+    Fast path (r12): the parquet FOOTER schema
+    (``sources.footer.arrow_schema``) converted via
+    ``from_arrow_schema(prefer_timestamp_ntz=True)`` — validated
     field-for-field identical to the Spark batch probe on every
     fixture generation, ~1 ms instead of a ~0.2 s batch-read probe per
-    replay. Any surprise (remote path, missing pyarrow, exotic type)
-    falls back to the original Spark probe under the nanosAsLong conf."""
-    import glob as globmod
-
-    p = probe_path[7:] if probe_path.startswith("file://") else probe_path
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        if os.path.isfile(p):
-            files = [p]
-        else:
-            files = sorted(globmod.glob(os.path.join(p, "*.parquet"))) or (
-                sorted(globmod.glob(p)) if globmod.has_magic(p) else []
-            )
-        if not files:
-            raise FileNotFoundError(p)
-        pf = pq.ParquetFile(files[0])
-        if any(
-            pf.metadata.schema.column(i).physical_type == "INT96"
-            for i in range(pf.metadata.num_columns)
-        ):
-            # INT96 timestamps (legacy Spark writer default): pyarrow
-            # surfaces them as timestamp[ns], indistinguishable from the
-            # ns-annotated encoding at the arrow level — let the Spark
-            # probe classify them (it reads INT96 as TIMESTAMP natively)
-            raise ValueError("INT96 timestamps: defer to the Spark probe")
-        arrow = pf.schema_arrow
-        ts_type = arrow.field("ts").type
-        # legacy generators wrote nanosecond timestamps: pyarrow reports
-        # them as timestamp[ns] (or raw int64 epoch-ns) — both read as
-        # bigint under nanosAsLong, i.e. the ns→µs decode branch
-        if ts_type == pa.int64() or (
-            pa.types.is_timestamp(ts_type) and ts_type.unit == "ns"
-        ):
-            return True, EVENTS_FILE_SCHEMA
-        return False, from_arrow_schema(arrow, prefer_timestamp_ntz=True)
-    except Exception:
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ts_is_ns_long = False
+    replay. Paths the footer listing rule does not serve, INT96
+    timestamps (pyarrow surfaces them as timestamp[ns], which only the
+    Spark probe can tell from the ns-annotated encoding) and any
+    conversion surprise fall back to the Spark probe under the
+    nanosAsLong conf."""
+    arrow = footer.arrow_schema(probe_path)
+    if arrow is not None:
         try:
-            probed = spark.read.parquet(probe_path)
-            ts_is_ns_long = dict(probed.dtypes).get("ts") == "bigint"
-        finally:
-            if not ts_is_ns_long:
-                # restore — the conf must stay set for the stream's
-                # lifetime only when micro-batches need the ns decode
-                if prev is None:
-                    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-                else:
-                    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-        return ts_is_ns_long, (
-            EVENTS_FILE_SCHEMA if ts_is_ns_long else probed.schema
-        )
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            ts_type = arrow.field("ts").type
+            # legacy generators wrote nanosecond timestamps: pyarrow
+            # reports them as timestamp[ns] (or raw int64 epoch-ns) —
+            # both read as bigint under nanosAsLong, i.e. the ns→µs
+            # decode branch
+            if ts_type == pa.int64() or (
+                pa.types.is_timestamp(ts_type) and ts_type.unit == "ns"
+            ):
+                return True, EVENTS_FILE_SCHEMA
+            return False, from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+        except Exception:  # no ts column / a type Spark cannot map
+            pass
+    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ts_is_ns_long = False
+    try:
+        probed = spark.read.parquet(probe_path)
+        ts_is_ns_long = dict(probed.dtypes).get("ts") == "bigint"
+    finally:
+        if not ts_is_ns_long:
+            # restore — the conf must stay set for the stream's
+            # lifetime only when micro-batches need the ns decode
+            if prev is None:
+                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+            else:
+                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+    return ts_is_ns_long, (EVENTS_FILE_SCHEMA if ts_is_ns_long else probed.schema)
 
 
 def open_events_stream(
@@ -255,38 +238,22 @@ _STATE_MAX_PARTITIONS = 32768
 
 def projected_state_partitions(path: str) -> int | None:
     """State-store partition count from the source's projected state
-    size — decoded (uncompressed) bytes from parquet footers over a
-    per-partition target — or None when the footers are unreadable
-    (caller then leaves ``spark.sql.shuffle.partitions`` alone).
+    size — decoded (uncompressed) bytes from parquet footers
+    (``sources.footer.decoded_bytes``: at most 64 footers, scaled by
+    the part count) over a per-partition target — or None when the
+    footers are unreadable (caller then leaves
+    ``spark.sql.shuffle.partitions`` alone).
 
     Unlike sizing state partitions to the core count, this rule is
     scale-adaptive in the direction that matters: a small replay stops
     paying dozens of per-partition commit floors, a 100 TB source
     still fans out (input bytes only overestimate state, which errs
     toward MORE partitions — the safe side for memory)."""
-    import glob as globmod
-
-    p = path[7:] if path.startswith("file://") else path
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(p):
-            files = [p]
-        elif os.path.isdir(p):
-            files = sorted(globmod.glob(os.path.join(p, "*.parquet")))
-        else:
-            files = sorted(globmod.glob(p)) if globmod.has_magic(p) else []
-        if not files:
-            return None
-        total = 0
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                total += md.row_group(rg).total_byte_size  # uncompressed
-        n = -(-total // _STATE_TARGET_BYTES)  # ceil
-        return max(_STATE_MIN_PARTITIONS, min(int(n), _STATE_MAX_PARTITIONS))
-    except Exception:
+    total = footer.decoded_bytes(path)
+    if total is None:
         return None
+    n = -(-total // _STATE_TARGET_BYTES)  # ceil
+    return max(_STATE_MIN_PARTITIONS, min(n, _STATE_MAX_PARTITIONS))
 
 
 def run_to_completion(
@@ -305,6 +272,10 @@ def run_to_completion(
     this IS the state-store partition count, pinned into the
     checkpoint at first start — and the session value is restored
     after the drain. Derive it with :func:`projected_state_partitions`.
+    The value is set on the SESSION-GLOBAL conf for the whole drain,
+    so a query another thread plans on the same session meanwhile
+    inherits it: not safe for concurrent builders (e.g. a thread pool
+    building plans while a replay drains).
 
     Raises on timeout instead of returning a partial sink: the
     still-running query would keep mutating the memory table under the

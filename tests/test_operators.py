@@ -957,3 +957,25 @@ def test_cc_footer_rowcount_fast_path_engages(spark):
     assert comp == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     # the footer read happened and succeeded (scratch still on disk)
     assert seen and seen[0] == 3, seen
+
+
+def test_key_fast_path_only_for_plain_names(spark):
+    """surrogate_key/tuple_digest take the SQL-text fast path only for
+    plain ``\\w+`` names: a dotted name must resolve as F.col does (the
+    nested struct field), so string and Column spellings of one key
+    give equal digests — and equal the fast path over the flattened
+    field."""
+    from projet5_spark.functions.keys import surrogate_key, tuple_digest
+
+    df = spark.createDataFrame(
+        [((1, "p"), "x1"), ((2, None), "x2"), ((None, "q"), None)],
+        "a struct<b: long, c: string>, x string",
+    ).withColumn("ab", F.col("a.b")).withColumn("ac", F.col("a.c"))
+    for fn in (surrogate_key, tuple_digest):
+        got = df.select(
+            fn("a.b", "a.c", "x").alias("by_name"),
+            fn(F.col("a.b"), F.col("a.c"), F.col("x")).alias("by_col"),
+            fn("ab", "ac", "x").alias("flat"),
+        ).collect()
+        assert all(r.by_name == r.by_col == r.flat for r in got), (fn, got)
+        assert len({r.by_name for r in got}) == 3

@@ -7,8 +7,10 @@ showed up as an unexplained bench mover. This canary rebuilds a spread
 of LAZY queries (no eager materialization at build time, so the test
 stays cheap) at the same SF the baseline was dumped at and asserts the
 plan-shape counts still match the committed dump. The full-catalog
-gate is `tools/explain_dump.py --tag r13/close` + `tools/plan_shape.py`
-at round close.
+gate dumps every entry with `tools/explain_dump.py --tag <tag> --suffix
+plan` and diffs that dump against the baseline with
+`tools/plan_shape.py plans/r13/baseline plans/<tag>`; the dump is not
+committed once the diff is clean.
 """
 
 from __future__ import annotations

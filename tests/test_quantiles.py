@@ -180,3 +180,15 @@ def test_attach_matches_grouped_join_back(spark):
     for r in attach_exact_quantiles(raw, [], "v", qs).collect():
         for name in qs:
             assert r[name] == gwant[name]
+
+
+@pytest.mark.parametrize("col", ["__cum", "__n", "__prev", "__N"])
+def test_attach_rejects_reserved_column_names(spark, col):
+    """Hostile input: a caller column named like one of the window
+    pass's internal columns must fail with a clear ValueError, not an
+    ambiguous-reference analysis error or a silently wrong quantile."""
+    from projet5_spark.operators.quantiles import attach_exact_quantiles
+
+    df = spark.createDataFrame([("a", 1, 7), ("a", 3, 7)], f"g string, v long, {col} long")
+    with pytest.raises(ValueError, match="reserved"):
+        attach_exact_quantiles(df, ["g"], "v", {"q50": 0.5})

@@ -4,6 +4,7 @@ original; column normalization is metadata-only."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -403,7 +404,7 @@ def test_footer_schema_multipart_directory(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from projet5_spark.sources import readers
+    from projet5_spark.sources import footer
     from projet5_spark.sources.readers import _footer_schema
 
     uniform = tmp_path / "uniform.parquet"
@@ -428,6 +429,75 @@ def test_footer_schema_multipart_directory(spark, tmp_path):
 
     capped = tmp_path / "capped.parquet"
     capped.mkdir()
-    for i in range(readers._FOOTER_SCHEMA_MAX_PARTS + 1):
+    for i in range(footer.MAX_PARTS + 1):
         pq.write_table(t, capped / f"part-{i:03d}.parquet")
     assert _footer_schema(str(capped)) is None  # over the probe cap
+
+
+@pytest.mark.parametrize("layout", ["mixed", "over_cap"])
+def test_footer_fast_paths_fall_back_to_spark(spark, tmp_path, layout):
+    """Layouts the footer listing rule does not serve must take the
+    Spark fallbacks and agree with Spark: a mixed layout (a top-level
+    part beside a ``k=v/`` subdirectory, which Spark's partition
+    discovery reads as 3 rows with max 5 — a flat footer sum said 2
+    and 2) and a directory of more parts than the probe cap."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from projet5_spark.sources import footer
+    from projet5_spark.sources.readers import (
+        _footer_schema,
+        fixture_column_max,
+        fixture_rowcount,
+    )
+
+    path = tmp_path / "t.parquet"
+    path.mkdir()
+    if layout == "mixed":
+        pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}),
+                       path / "part-0.parquet")
+        (path / "lang=en").mkdir()
+        pq.write_table(pa.table({"k": pa.array([3, 4, 5], pa.int64())}),
+                       path / "lang=en" / "part-1.parquet")
+    else:
+        for i in range(footer.MAX_PARTS + 1):
+            pq.write_table(pa.table({"k": pa.array([i], pa.int64())}),
+                           path / f"part-{i:03d}.parquet")
+    df = spark.read.parquet(str(path))
+
+    class CountSpy:
+        calls = 0
+
+        def count(self):
+            CountSpy.calls += 1
+            return df.count()
+
+    n = fixture_rowcount(spark, str(tmp_path), "t", fallback_df=CountSpy())
+    assert CountSpy.calls == 1  # the footer sum was not trusted
+    assert n == df.count()
+    assert fixture_column_max(spark, str(tmp_path), "t", "k") == (
+        df.agg(F.max("k")).first()[0]
+    )
+    assert _footer_schema(str(path)) is None
+
+
+def test_footer_column_max_reads_the_leaf_column(spark, tmp_path):
+    """Row-group statistics are indexed by parquet LEAF column: a
+    struct field ahead of the key shifts the key's leaf index past its
+    top-level field index, and the footer max must still be the key's
+    (the top-level index read the struct's second leaf, 900 here)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from projet5_spark.sources.readers import fixture_column_max
+
+    s = pa.struct([("a", pa.int64()), ("b", pa.int64())])
+    pq.write_table(
+        pa.table({"s": pa.array([{"a": 100, "b": 900}, {"a": 1, "b": 2}], s),
+                  "k": pa.array([5, 3], pa.int64())}),
+        tmp_path / "t.parquet",
+    )
+    got = fixture_column_max(spark, str(tmp_path), "t", "k")
+    assert got == 5 == spark.read.parquet(str(tmp_path / "t.parquet")).agg(
+        F.max("k")
+    ).first()[0]

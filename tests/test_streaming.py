@@ -773,3 +773,36 @@ def test_projected_state_partitions_rule(spark, tmp_path):
     )
     assert out.count() > 0
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_projected_state_partitions_samples_over_cap_sources(tmp_path, monkeypatch):
+    """Past the footer cap the state-partition probe stays a bounded
+    driver read (~100k parts at 100 TB would otherwise mean ~100k
+    footer reads): it opens at most ``footer.MAX_PARTS`` footers and
+    scales their mean decoded bytes per part by the part count — exact
+    on uniform parts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from projet5_spark.sources import footer
+    from projet5_spark.streaming.windows import (
+        _STATE_MIN_PARTITIONS,
+        projected_state_partitions,
+    )
+
+    src = tmp_path / "events.parquet"
+    src.mkdir()
+    n_parts = 2 * footer.MAX_PARTS + 3
+    t = pa.table({"v": pa.array(range(100), pa.int64())})
+    for i in range(n_parts):
+        pq.write_table(t, src / f"part-{i:04d}.parquet")
+    per_part = pq.ParquetFile(src / "part-0000.parquet").metadata.row_group(0).total_byte_size
+
+    opened = []
+    real = footer._footer
+    monkeypatch.setattr(footer, "_footer", lambda f: opened.append(f) or real(f))
+    assert footer.decoded_bytes(str(src)) == n_parts * per_part
+    assert 0 < len(opened) <= footer.MAX_PARTS
+    opened.clear()
+    assert projected_state_partitions(str(src)) == _STATE_MIN_PARTITIONS
+    assert 0 < len(opened) <= footer.MAX_PARTS
