@@ -10,6 +10,13 @@ Reference semantics covered (SURVEY.md §2.1):
   target per row (``find_one``); :func:`append_if_absent` replaces that
   with one **left-anti join** of the new batch against the existing
   table on the natural key.
+- Upsert — :func:`merge_upsert` stages the batch once (write it, then
+  append the table's rows the batch does not replace into the same
+  staging directory) and swaps the directory in; :func:`scd2_upsert`
+  keeps version history behind the same swap (:func:`_swap_commit`).
+  Row counts of written parquet come from footers
+  (:func:`_table_rows`), so a merge or a first load never re-runs the
+  batch's lineage (CSV scan, cleaning) just to count it.
 - R17 index creation — migration.py:80-103: Spark has no secondary
   indexes; the physical-layout analog (SURVEY.md §4.3) is
   ``partitionBy`` (partition pruning) + ``sortWithinPartitions``
@@ -21,8 +28,15 @@ table lands partitioned on its pruning key with clustered sort order.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import footer
 
 
 def write_parquet(
@@ -60,8 +74,6 @@ def _existing_or_none(spark: SparkSession, path: str):
     """
     import glob
     import logging
-    import os
-    import shutil
 
     if not os.path.exists(path):
         leftovers = glob.glob(f"{path}__old_*") + glob.glob(f"{path}__staging_*")
@@ -90,21 +102,34 @@ def _existing_or_none(spark: SparkSession, path: str):
     return spark.read.parquet(path)
 
 
-def _swap_commit(out: DataFrame, path: str) -> None:
-    """Crash-safe table replacement: write staging → rename current
-    aside → rename staging in → delete the set-aside copy. Each rename
-    is a single atomic ``os.rename``; a crash can leave a stale
-    ``__old``/``__staging`` directory (detected on the next merge) but
-    never a destroyed table — unlike delete-then-move. An in-process
-    failure of the commit rename rolls the original back."""
-    import os
-    import shutil
-    import uuid
+def _table_rows(spark: SparkSession, path: str) -> int:
+    """Rows of the parquet table at ``path``: the footers' row counts
+    when :func:`footer.row_count` gives them, else a Spark ``count()``
+    of the written files — never a re-run of the lineage that wrote
+    them."""
+    n = footer.row_count(path)
+    return spark.read.parquet(path).count() if n is None else n
 
+
+@contextmanager
+def _swap_commit(path: str):
+    """Crash-safe table replacement. The body writes the new table into
+    the yielded staging directory; on a clean exit the commit renames
+    the current table aside, renames staging in and deletes the
+    set-aside copy. Each rename is a single atomic ``os.rename``; a
+    crash can leave a stale ``__old``/``__staging`` directory (detected
+    on the next merge) but never a destroyed table — unlike
+    delete-then-move. A body that raises deletes its staging directory
+    and leaves the table untouched; an in-process failure of the commit
+    rename rolls the original back."""
     token = uuid.uuid4().hex[:8]
     staging = f"{path}__staging_{token}"
     backup = f"{path}__old_{token}"
-    out.write.mode("overwrite").parquet(staging)
+    try:
+        yield staging
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     os.rename(path, backup)
     try:
         os.rename(staging, path)
@@ -124,24 +149,41 @@ def merge_upsert(
     replaced by the new version, unseen keys are inserted. Returns
     (updated, inserted) counts.
 
-    Plan: one anti-join (surviving old rows) + union with the new batch,
-    written to a staging path then swapped via :func:`_swap_commit` —
-    the parquet-only stand-in for ``MERGE INTO`` (a Delta/Iceberg table
-    would make the swap a metadata commit; the dataflow is identical).
-    The new batch must be unique on ``key_cols``.
+    Dataflow — the batch's lineage (CSV scan, cleaning, ...) runs once:
+
+    1. ``new`` is written into the staging directory of
+       :func:`_swap_commit`, in the merged output's column order and
+       types (a ``unionByName`` against an empty copy of the table,
+       which scans nothing);
+    2. the table's rows whose key is absent from the keys read back
+       from that staged parquet — one left-anti join — are appended
+       into the same directory;
+    3. the staging directory is swapped in.
+
+    This is the parquet-only stand-in for ``MERGE INTO`` (a
+    Delta/Iceberg table would make the swap a metadata commit; the
+    dataflow is identical). Every count is read from parquet footers
+    (:func:`_table_rows`): the table's rows before the merge, the
+    staged batch's rows, and the survivors as staging's rows after the
+    append minus the batch's. The new batch must be unique on
+    ``key_cols``.
     """
     existing = _existing_or_none(spark, path)
     if existing is None:
         new.write.mode("overwrite").parquet(path)
-        return 0, new.count()
+        return 0, _table_rows(spark, path)
 
-    survivors = existing.join(new.select(*key_cols), on=key_cols, how="left_anti")
-    n_old = existing.count()
-    n_surv = survivors.count()
-    updated = n_old - n_surv
-    inserted = new.count() - updated
-    _swap_commit(survivors.unionByName(new), path)
-    return updated, inserted
+    with _swap_commit(path) as staging:
+        existing.limit(0).unionByName(new).write.parquet(staging)
+        n_new = _table_rows(spark, staging)
+        staged = spark.read.parquet(staging)
+        survivors = existing.join(
+            staged.select(*key_cols), on=key_cols, how="left_anti"
+        ).select(*(F.col(f.name).cast(f.dataType) for f in staged.schema))
+        survivors.write.mode("append").parquet(staging)
+        n_surv = _table_rows(spark, staging) - n_new
+        updated = _table_rows(spark, path) - n_surv
+    return updated, n_new - updated
 
 
 def append_if_absent(
@@ -161,7 +203,7 @@ def append_if_absent(
     existing = _existing_or_none(spark, path)
     if existing is None:  # target doesn't exist yet -> plain write
         new.write.mode("overwrite").parquet(path)
-        return new.count()
+        return _table_rows(spark, path)
     existing = existing.select(*key_cols)
     to_insert = new.join(existing, on=key_cols, how="left_anti")
     # Cache: the frame is both written and counted; without it the
@@ -271,7 +313,7 @@ def scd2_upsert(
     existing = _existing_or_none(spark, path)
     if existing is None:
         stamped.write.mode("overwrite").parquet(path)
-        return 0, stamped.count()
+        return 0, _table_rows(spark, path)
 
     current = existing.where(F.col("__current"))
     history = existing.where(~F.col("__current"))
@@ -315,7 +357,8 @@ def scd2_upsert(
     )
     n_closed = closed.count()
     n_inserted = inserts.count()
-    _swap_commit(out, path)
+    with _swap_commit(path) as staging:
+        out.write.parquet(staging)
     return n_closed, n_inserted
 
 

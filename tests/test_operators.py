@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -163,6 +164,130 @@ def test_merge_upsert(spark, tmp_path):
     assert (upd, ins) == (1, 1)
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
+
+
+def test_merge_upsert_evaluates_batch_once(spark, tmp_path):
+    """A first load and a merge each run the batch's lineage once: the
+    counts come from the written parquet's footers and the survivors'
+    anti-join reads the staged batch back instead of re-running it."""
+    from pyspark.sql.types import LongType
+
+    from projet5_spark.sources.writers import merge_upsert
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tally(k):
+        evaluated.add(1)
+        return k
+
+    ident = F.udf(tally, LongType()).asNondeterministic()
+
+    def batch(lo, hi):
+        # the filter reads the UDF's output, so no plan (a count's
+        # included) can prune the UDF away
+        return (
+            spark.range(lo, hi)
+            .select(ident("id").alias("k"), F.lit("v").alias("v"))
+            .where(F.col("k").isNotNull())
+        )
+
+    path = str(tmp_path / "once")
+    assert merge_upsert(spark, batch(0, 50), path, ["k"]) == (0, 50)
+    assert evaluated.value == 50
+    evaluated.value = 0
+    assert merge_upsert(spark, batch(30, 70), path, ["k"]) == (20, 20)
+    assert evaluated.value == 40
+
+
+def test_merge_upsert_batch_column_order_matches_union_by_name(spark, tmp_path):
+    """A batch whose columns arrive in another order (and a narrower
+    type widened by the table) reads back exactly as the table's
+    survivors ``unionByName`` the batch."""
+    from projet5_spark.sources.writers import merge_upsert
+
+    path = str(tmp_path / "order")
+    spark.createDataFrame(
+        [(1, "a", 10), (2, "b", 20)], "k int, v string, w int"
+    ).write.parquet(path)
+    batch = spark.createDataFrame(
+        [(200, 2, "B"), (300, 3, "c")], "w long, k int, v string"
+    )
+    want = (
+        spark.read.parquet(path)
+        .join(batch.select("k"), "k", "left_anti")
+        .unionByName(batch)
+    )
+    want_schema, want_rows = want.schema.simpleString(), sorted(want.collect())
+    assert merge_upsert(spark, batch, path, ["k"]) == (1, 1)
+    got = spark.read.parquet(path)
+    assert got.schema.simpleString() == want_schema
+    assert sorted(got.collect()) == want_rows
+
+
+def test_merge_upsert_counts_without_footers(spark, tmp_path, monkeypatch):
+    """With the footer fast path off, the counts come from Spark's
+    ``count()`` of the written parquet and are the same."""
+    from projet5_spark.sources import footer
+    from projet5_spark.sources.writers import merge_upsert
+
+    monkeypatch.setattr(footer, "MAX_PARTS", 0)
+    path = str(tmp_path / "nofooter")
+    base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "v"])
+    assert merge_upsert(spark, base, path, ["k"]) == (0, 3)
+    assert footer.row_count(path) is None
+    batch = spark.createDataFrame([(2, "B"), (4, "d")], ["k", "v"])
+    assert merge_upsert(spark, batch, path, ["k"]) == (1, 1)
+    assert spark.read.parquet(path).count() == 4
+
+
+def test_merge_upsert_failed_append_leaves_table_and_no_staging(
+    spark, tmp_path, monkeypatch
+):
+    """A failure while appending the survivors into staging leaves the
+    table as it was and deletes the staging directory."""
+    import glob
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from projet5_spark.sources.writers import merge_upsert
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]).write.parquet(path)
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, target, *args, **kwargs):
+        if "__staging_" in target and os.path.exists(target):
+            raise OSError("simulated append failure")
+        return real_parquet(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    batch = spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"])
+    with pytest.raises(OSError, match="simulated append failure"):
+        merge_upsert(spark, batch, path, ["k"])
+    back = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
+    assert back == {(1, "a"), (2, "b")}
+    assert glob.glob(f"{path}__*") == []
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="merge_upsert anti-joins on plain `=`, so a NULL key never "
+    "matches and is inserted again on every merge. The null-safe fix "
+    "changes healthcare_etl's failed count, which "
+    "perfbench/test_perfbench.py::test_smoke_run[healthcare_etl-*] pins, "
+    "so it lands together with a benchmark change.",
+)
+def test_merge_upsert_reapply_with_null_key_is_idempotent(spark, tmp_path):
+    from projet5_spark.sources.writers import merge_upsert
+
+    path = str(tmp_path / "nullkey")
+    batch = spark.createDataFrame(
+        [(1, "a"), (None, "n"), (2, "b")], "k int, v string"
+    )
+    assert merge_upsert(spark, batch, path, ["k"]) == (0, 3)
+    assert merge_upsert(spark, batch, path, ["k"]) == (3, 0)
+    assert spark.read.parquet(path).count() == 3
 
 
 def _shingle_set(text: str) -> set[str]:
