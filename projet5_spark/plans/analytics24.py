@@ -230,13 +230,16 @@ def _kcore_oracle() -> str:
     e0 AS (SELECT a, b FROM fact CROSS JOIN thr WHERE w >= t)
     """
     prev = "e0"
+    # MATERIALIZED: every round reads the round before it more than
+    # once, and an inlined CTE chain re-runs the fact join per read —
+    # at sf0.01 that spills until the disk is full
     for r in range(1, _KCORE_ROUNDS + 1):
         sql += f""",
-    d{r} AS (
+    d{r} AS MATERIALIZED (
       SELECT nk, count(*) AS deg FROM (
         SELECT a AS nk FROM {prev} UNION ALL SELECT b FROM {prev})
       GROUP BY nk HAVING count(*) >= {_KCORE_K}),
-    e{r} AS (
+    e{r} AS MATERIALIZED (
       SELECT e.a, e.b FROM {prev} e
       JOIN d{r} da ON e.a = da.nk
       JOIN d{r} db ON e.b = db.nk)"""

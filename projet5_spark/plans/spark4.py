@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
+from ..session import scoped_conf
 from ..sources.readers import fixture_table as _t
 from .registry import query
 
@@ -399,9 +400,7 @@ def sql_scripting_threshold_search(spark: SparkSession, sf_dir: str) -> DataFram
     quality_threshold_calibration) when the iteration count is known
     to be bounded."""
     _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_script")
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with scoped_conf(spark, "spark.sql.scripting.enabled", "true"):
         out = spark.sql(
             f"""
             BEGIN
@@ -420,11 +419,6 @@ def sql_scripting_threshold_search(spark: SparkSession, sf_dir: str) -> DataFram
             END
             """
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
     return out
 
 

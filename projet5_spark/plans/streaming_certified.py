@@ -30,6 +30,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 from .events import _TS_FMT_DUCK
 from .registry import query
 
@@ -297,6 +298,19 @@ def _bridge_protobuf(spark: SparkSession) -> None:
         env["PYTHONPATH"] = shim + (os.pathsep + prev if prev else "")
 
 
+def _rocksdb_state(spark: SparkSession):
+    """Scope for a transformWithState drain: bridges protobuf and sets
+    the RocksDB state-store provider the API requires, restoring the
+    provider conf on exit (see :func:`scoped_conf`)."""
+    _bridge_protobuf(spark)
+    return scoped_conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+
+
 @query(
     "streaming_apply_in_pandas_with_state_availablenow",
     oracle="""
@@ -396,15 +410,7 @@ def streaming_transform_with_state_availablenow(
     from ..streaming.stateful import streaming_event_type_stats
     from ..streaming.windows import stream_events
 
-    _bridge_protobuf(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with _rocksdb_state(spark):
         stream = stream_events(spark, sf_dir)
         updates = _drain(
             streaming_event_type_stats(stream),
@@ -412,11 +418,6 @@ def streaming_transform_with_state_availablenow(
             output_mode="update",
             src_path=f"{sf_dir}/events.parquet",
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     w = Window.partitionBy("event_type").orderBy(F.desc("n_events"))
     return (
         updates.withColumn("_rn", F.row_number().over(w))
@@ -454,15 +455,7 @@ def streaming_list_state_availablenow(spark: SparkSession, sf_dir: str) -> DataF
     from ..streaming.stateful import streaming_user_values_list
     from ..streaming.windows import stream_events
 
-    _bridge_protobuf(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with _rocksdb_state(spark):
         stream = stream_events(spark, sf_dir)
         # NO state-partition rule here (r13): this processor's per-key
         # Python state payload makes the replay COMPUTE-bound in the
@@ -475,11 +468,6 @@ def streaming_list_state_availablenow(spark: SparkSession, sf_dir: str) -> DataF
             "st_list",
             output_mode="update",
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         updates.withColumn("_rn", F.row_number().over(w))
@@ -511,15 +499,7 @@ def streaming_map_state_availablenow(spark: SparkSession, sf_dir: str) -> DataFr
     from ..streaming.stateful import streaming_user_type_map
     from ..streaming.windows import stream_events
 
-    _bridge_protobuf(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with _rocksdb_state(spark):
         stream = stream_events(spark, sf_dir)
         # NO state-partition rule here (r13): this processor's per-key
         # Python state payload makes the replay COMPUTE-bound in the
@@ -532,11 +512,6 @@ def streaming_map_state_availablenow(spark: SparkSession, sf_dir: str) -> DataFr
             "st_map",
             output_mode="update",
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     w = Window.partitionBy("user_id", "event_type").orderBy(F.desc("n_events"))
     return (
         updates.withColumn("_rn", F.row_number().over(w))
@@ -573,11 +548,7 @@ def statestore_reader_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     # as _drain); the state reader below decodes whatever partition
     # count the checkpoint holds
     sp = projected_state_partitions(f"{sf_dir}/events.parquet")
-    prev = None
-    if sp is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", sp):
         q = (
             stream.dropDuplicates(["event_id"])
             .writeStream.format("noop")
@@ -586,9 +557,6 @@ def statestore_reader_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame
             .start()
         )
         finished = q.awaitTermination(300)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     if not finished:
         # a timed-out drain leaves an IN-PROGRESS checkpoint: reading
         # it would certify a partial dedup state — fail loudly instead
@@ -642,15 +610,7 @@ def streaming_timer_session_close_availablenow(
     from ..streaming.stateful import streaming_session_close_timers
     from ..streaming.windows import stream_events
 
-    _bridge_protobuf(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with _rocksdb_state(spark):
         stream = stream_events(spark, sf_dir).withWatermark("ts", "0 seconds")
         updates = _drain(
             streaming_session_close_timers(stream),
@@ -658,11 +618,6 @@ def streaming_timer_session_close_availablenow(
             output_mode="update",
             src_path=f"{sf_dir}/events.parquet",
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     return updates.where(F.col("kind") == "closed").select(
         "user_id", "n_events"
     )

@@ -20,6 +20,8 @@ configured for the execution profile we want at scale:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -98,3 +100,29 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     return spark
+
+
+@contextmanager
+def scoped_conf(
+    spark: SparkSession, key: str, value: str | int | None
+) -> Iterator[None]:
+    """Set the runtime conf ``key`` to ``value`` for the body, then
+    restore its old value, or unset it when it had none — also when the
+    body raises. ``value=None`` leaves the conf alone.
+
+    The conf is SESSION-GLOBAL while the body runs: a query another
+    thread plans on the same session meanwhile inherits it, so this is
+    not safe for concurrent builders (e.g. a thread pool building plans
+    while a replay drains)."""
+    if value is None:
+        yield
+        return
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

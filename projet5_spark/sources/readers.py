@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import scoped_conf
 from . import footer
 
 _log = logging.getLogger(__name__)
@@ -188,41 +189,29 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     # r12 fast path: footer-derived explicit schema (no inference job,
     # no conf dance). _footer_schema returns None for ns-ANNOTATED
-    # timestamps — those need the nanosAsLong conf below — while a raw
-    # int64 epoch-ns column reads natively as long and takes the same
-    # exact ns→µs integer conversion.
+    # timestamps — those need the nanosAsLong conf — while a raw int64
+    # epoch-ns column reads natively as long and takes the same exact
+    # ns→µs integer conversion.
     schema = _footer_schema(path)
     if schema is not None:
         df = spark.read.schema(schema).parquet(path)
-        ts_type = dict(df.dtypes).get("ts", "")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type.startswith("timestamp_ntz"):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes).get("ts", "")
-        if ts_type == "bigint":
-            # integer division, NOT `/1000` through double: epoch-ns
-            # values (~1.7e18) exceed double's 2^53 exact range
-            # (ulp ≈ 256 ns), so the double path can be off by 1 µs vs
-            # DuckDB's exact truncation
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type.startswith("timestamp_ntz"):
-            # newer fixture generators write a native timestamp[us]
-            # column, which Spark reads as TIMESTAMP_NTZ. Normalize to
-            # TIMESTAMP so downstream event-time ops (watermarks,
-            # unix_micros, tz-aware window fns) all see one type; the
-            # session tz is pinned UTC so the wall-clock is unchanged.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+    else:
+        with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
+            df = spark.read.parquet(path)
+    ts_type = dict(df.dtypes).get("ts", "")
+    if ts_type == "bigint":
+        # integer division, NOT `/1000` through double: epoch-ns
+        # values (~1.7e18) exceed double's 2^53 exact range
+        # (ulp ≈ 256 ns), so the double path can be off by 1 µs vs
+        # DuckDB's exact truncation
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type.startswith("timestamp_ntz"):
+        # newer fixture generators write a native timestamp[us]
+        # column, which Spark reads as TIMESTAMP_NTZ. Normalize to
+        # TIMESTAMP so downstream event-time ops (watermarks,
+        # unix_micros, tz-aware window fns) all see one type; the
+        # session tz is pinned UTC so the wall-clock is unchanged.
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

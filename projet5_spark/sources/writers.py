@@ -10,13 +10,14 @@ Reference semantics covered (SURVEY.md §2.1):
   target per row (``find_one``); :func:`append_if_absent` replaces that
   with one **left-anti join** of the new batch against the existing
   table on the natural key.
-- Upsert — :func:`merge_upsert` stages the batch once (write it, then
-  append the table's rows the batch does not replace into the same
-  staging directory) and swaps the directory in; :func:`scd2_upsert`
-  keeps version history behind the same swap (:func:`_swap_commit`).
-  Row counts of written parquet come from footers
-  (:func:`_table_rows`), so a merge or a first load never re-runs the
-  batch's lineage (CSV scan, cleaning) just to count it.
+- Upsert — :func:`merge_upsert` (SCD-1) and :func:`scd2_upsert`
+  (SCD-2) share one staged dataflow: the batch's new rows are written
+  once into the staging directory of a swap commit
+  (:func:`_swap_commit`), everything else is derived from that staged
+  parquet and appended beside it, and the directory is swapped in.
+  Every write that needs a count goes through :func:`_append`, which
+  reads it from parquet footers (:func:`_table_rows`), so no writer
+  re-runs a batch's lineage (CSV scan, cleaning) to count it.
 - R17 index creation — migration.py:80-103: Spark has no secondary
   indexes; the physical-layout analog (SURVEY.md §4.3) is
   ``partitionBy`` (partition pruning) + ``sortWithinPartitions``
@@ -111,6 +112,16 @@ def _table_rows(spark: SparkSession, path: str) -> int:
     return spark.read.parquet(path).count() if n is None else n
 
 
+def _append(spark: SparkSession, df: DataFrame, path: str) -> int:
+    """Append ``df`` to the parquet directory at ``path`` (created when
+    absent) and return the rows it added: the table's rows after the
+    write minus before, both from :func:`_table_rows`. The write is the
+    only job that evaluates ``df``."""
+    before = _table_rows(spark, path) if os.path.exists(path) else 0
+    df.write.mode("append").parquet(path)
+    return _table_rows(spark, path) - before
+
+
 @contextmanager
 def _swap_commit(path: str):
     """Crash-safe table replacement. The body writes the new table into
@@ -163,26 +174,21 @@ def merge_upsert(
     This is the parquet-only stand-in for ``MERGE INTO`` (a
     Delta/Iceberg table would make the swap a metadata commit; the
     dataflow is identical). Every count is read from parquet footers
-    (:func:`_table_rows`): the table's rows before the merge, the
-    staged batch's rows, and the survivors as staging's rows after the
-    append minus the batch's. The new batch must be unique on
-    ``key_cols``.
+    (:func:`_table_rows`, through :func:`_append`): the table's rows
+    before the merge, the staged batch's rows, and the survivors'. The
+    new batch must be unique on ``key_cols``.
     """
     existing = _existing_or_none(spark, path)
     if existing is None:
-        new.write.mode("overwrite").parquet(path)
-        return 0, _table_rows(spark, path)
+        return 0, _append(spark, new, path)
 
     with _swap_commit(path) as staging:
-        existing.limit(0).unionByName(new).write.parquet(staging)
-        n_new = _table_rows(spark, staging)
+        n_new = _append(spark, existing.limit(0).unionByName(new), staging)
         staged = spark.read.parquet(staging)
         survivors = existing.join(
             staged.select(*key_cols), on=key_cols, how="left_anti"
         ).select(*(F.col(f.name).cast(f.dataType) for f in staged.schema))
-        survivors.write.mode("append").parquet(staging)
-        n_surv = _table_rows(spark, staging) - n_new
-        updated = _table_rows(spark, path) - n_surv
+        updated = _table_rows(spark, path) - _append(spark, survivors, staging)
     return updated, n_new - updated
 
 
@@ -198,24 +204,14 @@ def append_if_absent(
     One anti-join instead of O(rows) point lookups. The existing side is
     pruned to the key columns before the join, so at scale the probe side
     reads only the key bytes from Parquet (column pruning) and AQE
-    broadcasts it when small.
+    broadcasts it when small. The anti-join's output is appended as is
+    and counted from footers (:func:`_append`), so it runs once; a
+    replay that adds nothing still writes one zero-row part.
     """
     existing = _existing_or_none(spark, path)
-    if existing is None:  # target doesn't exist yet -> plain write
-        new.write.mode("overwrite").parquet(path)
-        return _table_rows(spark, path)
-    existing = existing.select(*key_cols)
-    to_insert = new.join(existing, on=key_cols, how="left_anti")
-    # Cache: the frame is both written and counted; without it the
-    # anti-join would run twice.
-    to_insert.persist()
-    try:
-        n = to_insert.count()
-        if n:
-            to_insert.write.mode("append").parquet(path)
-    finally:
-        to_insert.unpersist()
-    return n
+    if existing is not None:
+        new = new.join(existing.select(*key_cols), on=key_cols, how="left_anti")
+    return _append(spark, new, path)
 
 
 def write_mongodb(
@@ -281,11 +277,20 @@ def scd2_upsert(
     version opens; unseen keys insert as current. Returns
     (versions_closed, versions_inserted).
 
-    Dataflow is set-based like :func:`merge_upsert` — one join to
-    classify current rows, a union of (untouched history + closed-out
-    rows + new versions) — and the write uses the same two-rename
-    crash-safe swap. On Delta/Iceberg this becomes MERGE with the same
-    branches. The new batch must be unique on ``key_cols``.
+    Dataflow — staged like :func:`merge_upsert`, so the batch's lineage
+    runs once and both counts come from footers (:func:`_append`):
+
+    1. one left join of the stamped batch against the current rows
+       picks the new versions, which are written into the staging
+       directory of :func:`_swap_commit` (``versions_inserted``);
+    2. the current rows whose key is in that staged parquet close out
+       at the staged ``__valid_from`` and are appended
+       (``versions_closed``);
+    3. history and the current rows whose key is not staged are
+       appended, and the directory is swapped in.
+
+    On Delta/Iceberg this becomes MERGE with the same branches. The new
+    batch must be unique on ``key_cols``.
 
     Change detection: a re-arriving key only versions when a non-key,
     non-``ts_col`` attribute actually changed (sha2 digest compare), so
@@ -312,53 +317,47 @@ def scd2_upsert(
     )
     existing = _existing_or_none(spark, path)
     if existing is None:
-        stamped.write.mode("overwrite").parquet(path)
-        return 0, _table_rows(spark, path)
+        return 0, _append(spark, stamped, path)
 
     current = existing.where(F.col("__current"))
-    history = existing.where(~F.col("__current"))
-    arriving = new.select(
+    cur = current.select(
         *key_cols,
-        F.col(ts_col).cast("timestamp").alias("__new_ts"),
-        digest.alias("__new_digest"),
+        F.col("__valid_from").alias("__cur_from"),
+        digest.alias("__cur_digest"),
+        F.lit(True).alias("__matched"),
     )
-    cur_digested = current.withColumn("__cur_digest", digest)
-    matched = cur_digested.join(arriving, on=key_cols, how="inner")
-    # a key only versions when the content changed AND the arrival is
-    # strictly newer than the open version — a replayed older snapshot
-    # (out-of-order delivery) must not close the current row with
-    # __valid_to < __valid_from and install stale values as current.
-    # coalesce: a NULL ts (unparseable/absent) is "not newer" — without
-    # it the three-valued NULL comparison drops the key from BOTH the
-    # versioning and the skip branch, leaving the old row open while
-    # the new one still inserts (two __current rows for one key)
-    versioning = (F.col("__cur_digest") != F.col("__new_digest")) & F.coalesce(
-        F.col("__new_ts") > F.col("__valid_from"), F.lit(False)
+    # a key versions when it is unseen, or when its content changed AND
+    # the arrival is strictly newer than the open version — a replayed
+    # older snapshot (out-of-order delivery) must not close the current
+    # row with __valid_to < __valid_from and install stale values as
+    # current. coalesce: a NULL ts (unparseable/absent) is "not newer",
+    # so such an arrival is skipped
+    is_new_version = F.col("__matched").isNull() | (
+        (F.col("__cur_digest") != digest)
+        & F.coalesce(F.col("__valid_from") > F.col("__cur_from"), F.lit(False))
     )
-    # changed current rows close out at the new version's timestamp
-    closed = (
-        matched.where(versioning)
-        .withColumn("__valid_to", F.col("__new_ts"))
-        .withColumn("__current", F.lit(False))
-        .drop("__new_ts", "__new_digest", "__cur_digest")
+    inserts = (
+        stamped.join(cur, on=key_cols, how="left")
+        .where(is_new_version)
+        .drop("__cur_from", "__cur_digest", "__matched")
     )
-    changed_keys = closed.select(*key_cols)
-    # current rows stay untouched when their key is absent, unchanged,
-    # or only matched by a stale (not-strictly-newer) arrival
-    untouched_current = current.join(changed_keys, on=key_cols, how="left_anti")
-    # only genuinely new content inserts: unseen keys + versioning keys;
-    # unchanged and stale arrivals are both skipped
-    no_insert_keys = matched.where(~versioning).select(*key_cols)
-    inserts = stamped.join(no_insert_keys, on=key_cols, how="left_anti")
-    out = (
-        history.unionByName(untouched_current)
-        .unionByName(closed)
-        .unionByName(inserts.select(*closed.columns))
-    )
-    n_closed = closed.count()
-    n_inserted = inserts.count()
     with _swap_commit(path) as staging:
-        out.write.parquet(staging)
+        n_inserted = _append(spark, existing.limit(0).unionByName(inserts), staging)
+        staged = spark.read.parquet(staging)
+        like_staged = [F.col(f.name).cast(f.dataType) for f in staged.schema]
+        opened = staged.select(*key_cols, F.col("__valid_from").alias("__new_from"))
+        # changed current rows close out at the new version's timestamp
+        closed = (
+            current.join(opened, on=key_cols, how="inner")
+            .withColumn("__valid_to", F.col("__new_from"))
+            .withColumn("__current", F.lit(False))
+            .select(*like_staged)
+        )
+        n_closed = _append(spark, closed, staging)
+        kept = existing.where(~F.col("__current")).unionByName(
+            current.join(opened, on=key_cols, how="left_anti")
+        )
+        _append(spark, kept.select(*like_staged), staging)
     return n_closed, n_inserted
 
 

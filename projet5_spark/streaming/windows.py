@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import scoped_conf
 from ..sources import footer
 
 #: legacy on-disk schema: ts as int64 nanoseconds (older fixture
@@ -272,20 +273,15 @@ def run_to_completion(
     this IS the state-store partition count, pinned into the
     checkpoint at first start — and the session value is restored
     after the drain. Derive it with :func:`projected_state_partitions`.
-    The value is set on the SESSION-GLOBAL conf for the whole drain,
-    so a query another thread plans on the same session meanwhile
-    inherits it: not safe for concurrent builders (e.g. a thread pool
-    building plans while a replay drains).
+    The value is scoped by :func:`projet5_spark.session.scoped_conf`,
+    so it is session-global for the whole drain: not safe for
+    concurrent builders.
 
     Raises on timeout instead of returning a partial sink: the
     still-running query would keep mutating the memory table under the
     caller's comparison."""
     spark = stream_df.sparkSession
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", state_partitions):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(query_name)
@@ -294,9 +290,6 @@ def run_to_completion(
             .start()
         )
         finished = q.awaitTermination(timeout_s)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     if not finished:
         q.stop()
         raise TimeoutError(

@@ -91,9 +91,12 @@ def test_oracle_tables_are_registered_views():
         }
         for t in list(unknown):
             # names defined as CTEs (with or without a column list,
-            # e.g. `walk(nk, hops) AS (`) or aliases inside the query
+            # e.g. `walk(nk, hops) AS (`, or `d1 AS MATERIALIZED (`) or
+            # aliases inside the query
             if re.search(
-                rf"\b{t}\s*(?:\([^)]*\))?\s+AS\s*\(", sql, re.I
+                rf"\b{t}\s*(?:\([^)]*\))?\s+AS\s*(?:MATERIALIZED\s*)?\(",
+                sql,
+                re.I,
             ) or re.search(rf"\)\s*(?:AS\s+)?{t}\b", sql, re.I):
                 unknown.discard(t)
         assert not unknown, f"{name}: unregistered tables {unknown}"

@@ -166,13 +166,31 @@ def test_merge_upsert(spark, tmp_path):
     assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
 
 
-def test_merge_upsert_evaluates_batch_once(spark, tmp_path):
+_WRITERS = ["merge_upsert", "append_if_absent", "scd2_upsert"]
+
+
+def _write(writer: str, spark, df, path):
+    """Call one of the three merge writers on key ``k`` (``ts`` is the
+    SCD-2 version timestamp)."""
+    from projet5_spark.sources import writers
+
+    extra = ("ts",) if writer == "scd2_upsert" else ()
+    return getattr(writers, writer)(spark, df, path, ["k"], *extra)
+
+
+@pytest.mark.parametrize("writer", _WRITERS)
+def test_writer_evaluates_batch_once(spark, tmp_path, writer):
     """A first load and a merge each run the batch's lineage once: the
-    counts come from the written parquet's footers and the survivors'
-    anti-join reads the staged batch back instead of re-running it."""
+    counts come from the written parquet's footers and everything the
+    merge derives from the batch reads the staged batch back instead of
+    re-running it."""
     from pyspark.sql.types import LongType
 
-    from projet5_spark.sources.writers import merge_upsert
+    first_load, merge = {
+        "merge_upsert": ((0, 50), (20, 20)),
+        "append_if_absent": (50, 20),
+        "scd2_upsert": ((0, 50), (20, 40)),
+    }[writer]
 
     evaluated = spark.sparkContext.accumulator(0)
 
@@ -182,20 +200,21 @@ def test_merge_upsert_evaluates_batch_once(spark, tmp_path):
 
     ident = F.udf(tally, LongType()).asNondeterministic()
 
-    def batch(lo, hi):
+    def batch(lo, hi, v, ts):
         # the filter reads the UDF's output, so no plan (a count's
         # included) can prune the UDF away
         return (
             spark.range(lo, hi)
-            .select(ident("id").alias("k"), F.lit("v").alias("v"))
+            .select(ident("id").alias("k"), F.lit(v).alias("v"), F.lit(ts).alias("ts"))
             .where(F.col("k").isNotNull())
         )
 
     path = str(tmp_path / "once")
-    assert merge_upsert(spark, batch(0, 50), path, ["k"]) == (0, 50)
+    t0, t1 = "2024-01-01 00:00:00", "2024-02-01 00:00:00"
+    assert _write(writer, spark, batch(0, 50, "v", t0), path) == first_load
     assert evaluated.value == 50
     evaluated.value = 0
-    assert merge_upsert(spark, batch(30, 70), path, ["k"]) == (20, 20)
+    assert _write(writer, spark, batch(30, 70, "w", t1), path) == merge
     assert evaluated.value == 40
 
 
@@ -240,20 +259,22 @@ def test_merge_upsert_counts_without_footers(spark, tmp_path, monkeypatch):
     assert spark.read.parquet(path).count() == 4
 
 
-def test_merge_upsert_failed_append_leaves_table_and_no_staging(
-    spark, tmp_path, monkeypatch
+@pytest.mark.parametrize("writer", ["merge_upsert", "scd2_upsert"])
+def test_writer_failed_append_leaves_table_and_no_staging(
+    spark, tmp_path, monkeypatch, writer
 ):
-    """A failure while appending the survivors into staging leaves the
-    table as it was and deletes the staging directory."""
+    """A failure while appending into a filled staging directory leaves
+    the table as it was and deletes the staging directory."""
     import glob
     import os
 
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from projet5_spark.sources.writers import merge_upsert
-
     path = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]).write.parquet(path)
+    t0, t1 = "2024-01-01 00:00:00", "2024-02-01 00:00:00"
+    base = spark.createDataFrame([(1, "a", t0), (2, "b", t0)], ["k", "v", "ts"])
+    _write(writer, spark, base, path)
+    before = sorted(spark.read.parquet(path).collect())
     real_parquet = DataFrameWriter.parquet
 
     def failing_parquet(self, target, *args, **kwargs):
@@ -262,31 +283,37 @@ def test_merge_upsert_failed_append_leaves_table_and_no_staging(
         return real_parquet(self, target, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
-    batch = spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"])
+    batch = spark.createDataFrame([(2, "B", t1), (3, "c", t1)], ["k", "v", "ts"])
     with pytest.raises(OSError, match="simulated append failure"):
-        merge_upsert(spark, batch, path, ["k"])
-    back = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert back == {(1, "a"), (2, "b")}
+        _write(writer, spark, batch, path)
+    assert sorted(spark.read.parquet(path).collect()) == before
     assert glob.glob(f"{path}__*") == []
 
 
 @pytest.mark.xfail(
     strict=True,
-    reason="merge_upsert anti-joins on plain `=`, so a NULL key never "
-    "matches and is inserted again on every merge. The null-safe fix "
-    "changes healthcare_etl's failed count, which "
+    reason="all three writers match keys on plain `=`, so a NULL key never "
+    "matches: merge_upsert and append_if_absent insert the NULL-key row "
+    "again on every replay, and scd2_upsert opens a second current version "
+    "for it. The null-safe `<=>` rule lands for all three writers at once: "
+    "it changes healthcare_etl's failed count, which "
     "perfbench/test_perfbench.py::test_smoke_run[healthcare_etl-*] pins, "
     "so it lands together with a benchmark change.",
 )
-def test_merge_upsert_reapply_with_null_key_is_idempotent(spark, tmp_path):
-    from projet5_spark.sources.writers import merge_upsert
-
+@pytest.mark.parametrize("writer", _WRITERS)
+def test_writer_reapply_with_null_key_is_idempotent(spark, tmp_path, writer):
+    first_load, replay = {
+        "merge_upsert": ((0, 3), (3, 0)),
+        "append_if_absent": (3, 0),
+        "scd2_upsert": ((0, 3), (0, 0)),
+    }[writer]
     path = str(tmp_path / "nullkey")
     batch = spark.createDataFrame(
-        [(1, "a"), (None, "n"), (2, "b")], "k int, v string"
+        [(1, "a", "2024-01-01"), (None, "n", "2024-01-01"), (2, "b", "2024-01-01")],
+        "k int, v string, ts string",
     )
-    assert merge_upsert(spark, batch, path, ["k"]) == (0, 3)
-    assert merge_upsert(spark, batch, path, ["k"]) == (3, 0)
+    assert _write(writer, spark, batch, path) == first_load
+    assert _write(writer, spark, batch, path) == replay
     assert spark.read.parquet(path).count() == 3
 
 

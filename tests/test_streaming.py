@@ -775,6 +775,32 @@ def test_projected_state_partitions_rule(spark, tmp_path):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
+def test_scoped_conf_restores_unsets_and_survives_raise(spark):
+    """``scoped_conf`` restores a conf's old value, unsets a conf that
+    had none, leaves the conf alone for ``None``, and restores it when
+    the body raises."""
+    from projet5_spark.session import scoped_conf
+
+    key = "spark.sql.graft.test.scoped"
+    spark.conf.set(key, "old")
+    with scoped_conf(spark, key, "new"):
+        assert spark.conf.get(key) == "new"
+    assert spark.conf.get(key) == "old"
+    with scoped_conf(spark, key, None):
+        assert spark.conf.get(key) == "old"
+    with scoped_conf(spark, key, 4):  # callers pass partition counts as int
+        assert spark.conf.get(key) == "4"
+    assert spark.conf.get(key) == "old"
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scoped_conf(spark, key, "new"):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(key) == "old"
+    spark.conf.unset(key)
+    with scoped_conf(spark, key, "new"):
+        assert spark.conf.get(key) == "new"
+    assert spark.conf.get(key, None) is None
+
+
 def test_projected_state_partitions_samples_over_cap_sources(tmp_path, monkeypatch):
     """Past the footer cap the state-partition probe stays a bounded
     driver read (~100k parts at 100 TB would otherwise mean ~100k
